@@ -186,16 +186,16 @@ def bench(spark, n: int, sample_mod: int) -> dict:
             spark, lambda: ivfpq_store_compact(spark, PREFIX)
         )
         row["compact_shuffle_mb"] = cm["shuffle_read_mb"]
-        from syslog_handler_with_clickhouse_spark.operators.dedup import (
+        from syslog_handler_with_clickhouse_spark.operators.similarity import (
+            IVFPQ_STORE,
+        )
+        from syslog_handler_with_clickhouse_spark.operators.store import (
             _bucket_file_depth,
             _partition_file_depth,
+            resolve,
         )
 
-        from syslog_handler_with_clickhouse_spark.operators.similarity import (
-            _ivfpq_store_phys,
-        )
-
-        phys = _ivfpq_store_phys(spark, PREFIX)
+        phys = resolve(spark, IVFPQ_STORE, PREFIX)
         row["v_depth_post_compact"] = _bucket_file_depth(spark, phys[0])
         row["codes_depth_post_compact"] = _partition_file_depth(
             spark, phys[1]

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import TOKEN_RE
+from . import store
 from .dedup import _size_floor, portable_hash60
 
 #: ppm scale for the tf-saturation term.
@@ -645,23 +646,12 @@ def bm25_topk_from_index(
 # oracled by q465 against q394's full-recompute SQL verbatim).
 
 
-def _bm25_store_tables(prefix: str) -> tuple[str, str, str]:
-    return f"{prefix}_postings", f"{prefix}_dl", f"{prefix}_df"
-
-
-def _bm25_store_phys(spark, prefix: str) -> tuple[str, str, str]:
-    """The PHYSICAL tables currently backing the store: compaction
-    alternates each logical table between ``t`` and ``t__alt``
-    (operators/genswap.py — the one-pass compact), so every reader and
-    appender resolves through here."""
-    from .genswap import current_table
-
-    tp, tl, td = _bm25_store_tables(prefix)
-    return (
-        current_table(spark, tp),
-        current_table(spark, tl),
-        current_table(spark, td),
-    )
+_POSTINGS = store.Table(
+    "postings", "doc_id bigint, token string, tf bigint", ("token",)
+)
+_DL = store.Table("dl", "doc_id bigint, dl bigint", ("doc_id",))
+_DF = store.Table("df", "token string, dfreq bigint", ("token",))
+BM25_STORE = (_POSTINGS, _DL, _DF)
 
 
 def bm25_store_init(
@@ -670,37 +660,7 @@ def bm25_store_init(
     """Create the empty bucketed BM25 index tables for
     :func:`bm25_store_insert`.  ``location`` roots the table files
     outside the warehouse dir (external tables)."""
-    tp, tl, td = _bm25_store_tables(prefix)
-    # a RE-init over a previously compacted store retires any __alt
-    # generations up front: the base names created below already win
-    # the resolver's preference, so this only reclaims orphans
-    for t in (tp, tl, td):
-        spark.sql(f"DROP TABLE IF EXISTS {t}__alt")
-    ep = spark.createDataFrame([], "doc_id bigint, token string, tf bigint")
-    el = spark.createDataFrame([], "doc_id bigint, dl bigint")
-    ed = spark.createDataFrame([], "token string, dfreq bigint")
-    wp = ep.write.mode("overwrite").bucketBy(num_buckets, "token").sortBy(
-        "token"
-    )
-    wl = el.write.mode("overwrite").bucketBy(
-        num_buckets, "doc_id"
-    ).sortBy("doc_id")
-    wd = ed.write.mode("overwrite").bucketBy(num_buckets, "token").sortBy(
-        "token"
-    )
-    if location is not None:
-        wp = wp.option("path", f"{location}/{tp}")
-        wl = wl.option("path", f"{location}/{tl}")
-        wd = wd.option("path", f"{location}/{td}")
-    # three independent (empty) table creations — overlap the driver's
-    # per-write catalog/commit latency (guide §2.6, operators/actions.py)
-    from .actions import run_actions
-
-    run_actions(
-        lambda: wp.saveAsTable(tp),
-        lambda: wl.saveAsTable(tl),
-        lambda: wd.saveAsTable(td),
-    )
+    store.create(spark, BM25_STORE, prefix, num_buckets, location)
 
 
 def bm25_store_insert(
@@ -722,10 +682,8 @@ def bm25_store_insert(
     the exactly-once snapshot-ingest recipe (``streaming/ingest.py``)
     whose sink dedupes replayed micro-batches by batch id.
 
-    Each append repartitions onto the table's bucket hash first
-    (repartition(n, cols) and bucketBy(n, cols) share the murmur3-pmod
-    layout), so every task writes exactly one bucket file — the dedup
-    store's writer-buffer lesson.
+    Each append is aligned to the table's bucket hash
+    (:func:`store.append`), so every task writes one bucket file.
 
     Compaction policy (round 16, the dedup store's
     ``auto_compact_depth`` discipline): every append adds one file per
@@ -738,11 +696,9 @@ def bm25_store_insert(
     threshold — serving stays bit-equal (compaction is pure layout),
     so the policy is pure I/O scheduling: one O(corpus) rewrite per k
     appends buys sort-free serving in between."""
-    from .dedup import _bucket_file_depth, _table_num_buckets
-
     from pyspark import StorageLevel
 
-    tp, tl, td = _bm25_store_phys(spark, prefix)
+    tp, tl, td = store.resolve(spark, BM25_STORE, prefix)
     if assert_new:
         bids = (
             batch.select(F.col("doc_id").cast("bigint").alias("doc_id"))
@@ -800,7 +756,6 @@ def bm25_store_insert(
     bdf = bp.groupBy("token").agg(
         F.count(F.lit(1)).cast("bigint").alias("dfreq")
     )
-    nb = _table_num_buckets(spark, tp)
     # postings writes FIRST and alone — the replay/torn guard above
     # probes it as the sentinel table, which is only sound if no other
     # table can be written before it (a crash leaving dl-only rows would
@@ -813,24 +768,10 @@ def bm25_store_insert(
     # probes each table independently, so any subset completes.
     from .actions import run_actions
 
-    bp.select("doc_id", "token", "tf").repartition(
-        nb, "token"
-    ).write.mode("append").bucketBy(nb, "token").sortBy("token").saveAsTable(
-        tp
-    )
+    store.append(spark, _POSTINGS, tp, bp.select("doc_id", "token", "tf"))
     run_actions(
-        lambda: bdl.select("doc_id", "dl")
-        .repartition(nb, "doc_id")
-        .write.mode("append")
-        .bucketBy(nb, "doc_id")
-        .sortBy("doc_id")
-        .saveAsTable(tl),
-        lambda: bdf.select("token", "dfreq")
-        .repartition(nb, "token")
-        .write.mode("append")
-        .bucketBy(nb, "token")
-        .sortBy("token")
-        .saveAsTable(td),
+        lambda: store.append(spark, _DL, tl, bdl.select("doc_id", "dl")),
+        lambda: store.append(spark, _DF, td, bdf.select("token", "dfreq")),
     )
 
     if stats is None and auto_compact_files is None:
@@ -838,7 +779,7 @@ def bm25_store_insert(
     # postings carries serving's SMJ; df accumulates one partial row
     # set per insert — take the worse of the two so a df-only compact
     # cannot mask postings depth (nor vice versa)
-    depth = max(_bucket_file_depth(spark, tp), _bucket_file_depth(spark, td))
+    depth = max(store.depth(spark, _POSTINGS, tp), store.depth(spark, _DF, td))
     compact = auto_compact_files is not None and depth > auto_compact_files
     if stats is not None:
         stats.append(
@@ -862,7 +803,7 @@ def bm25_store_fsck(spark, prefix: str) -> dict:
     O(corpus) aggregates over the bucketed tables — run on demand
     after a crash, not per insert (the insert guard's per-batch probes
     stay O(batch))."""
-    tp, tl, td = _bm25_store_phys(spark, prefix)
+    tp, tl, td = store.resolve(spark, BM25_STORE, prefix)
     postings_rows = int(spark.table(tp).count())
     df_sum = int(
         spark.table(td).agg(F.sum("dfreq")).collect()[0][0] or 0
@@ -903,35 +844,26 @@ def bm25_store_repair(spark, prefix: str, batch: DataFrame) -> dict:
     torn)."""
     from pyspark import StorageLevel
 
-    from .dedup import _table_num_buckets
-
-    tp, tl, td = _bm25_store_phys(spark, prefix)
+    tp, tl, td = store.resolve(spark, BM25_STORE, prefix)
     bp = _bm25_batch_stats(batch)[0].localCheckpoint(
         eager=True, storageLevel=StorageLevel.DISK_ONLY
     )
     bids = bp.select("doc_id").distinct()
-    nb = _table_num_buckets(spark, tp)
     wrote = {"postings": False, "dl": False, "df": False}
     in_postings = (
         bids.join(spark.table(tp).select("doc_id"), "doc_id", "semi")
         .limit(1).count() > 0
     )
     if not in_postings:
-        bp.select("doc_id", "token", "tf").repartition(
-            nb, "token"
-        ).write.mode("append").bucketBy(nb, "token").sortBy(
-            "token"
-        ).saveAsTable(tp)
+        store.append(spark, _POSTINGS, tp, bp.select("doc_id", "token", "tf"))
         wrote["postings"] = True
     in_dl = (
         bids.join(spark.table(tl), "doc_id", "semi").limit(1).count() > 0
     )
     if not in_dl:
-        bp.groupBy("doc_id").agg(
+        store.append(spark, _DL, tl, bp.groupBy("doc_id").agg(
             F.sum("tf").cast("bigint").alias("dl")
-        ).select("doc_id", "dl").repartition(nb, "doc_id").write.mode(
-            "append"
-        ).bucketBy(nb, "doc_id").sortBy("doc_id").saveAsTable(tl)
+        ))
         wrote["dl"] = True
     delta = int(spark.table(tp).count()) - int(
         spark.table(td).agg(F.sum("dfreq")).collect()[0][0] or 0
@@ -946,11 +878,9 @@ def bm25_store_repair(spark, prefix: str, batch: DataFrame) -> dict:
                 "that batch, or rebuild via bm25_store_init + bootstrap "
                 "insert."
             )
-        bp.groupBy("token").agg(
+        store.append(spark, _DF, td, bp.groupBy("token").agg(
             F.count(F.lit(1)).cast("bigint").alias("dfreq")
-        ).select("token", "dfreq").repartition(nb, "token").write.mode(
-            "append"
-        ).bucketBy(nb, "token").sortBy("token").saveAsTable(td)
+        ))
         wrote["df"] = True
     return wrote
 
@@ -958,7 +888,7 @@ def bm25_store_repair(spark, prefix: str, batch: DataFrame) -> dict:
 def bm25_store_df(spark, prefix: str) -> DataFrame:
     """Merged (token, dfreq) view over the stored df partials — the
     groupBy-sum runs exchange-free on the bucketed-by-token scan."""
-    _, _, td = _bm25_store_phys(spark, prefix)
+    td = store.resolve(spark, BM25_STORE, prefix)[2]
     return (
         spark.table(td)
         .groupBy("token")
@@ -999,7 +929,7 @@ def bm25_store_topk(
     observe each other's width.  The caller's ``queries`` frame
     crosses sessions through a context-level global temp view (dropped
     after the eager checkpoint materializes the queries×k result)."""
-    tp, tl, _ = _bm25_store_phys(spark, prefix)
+    tp, tl, _ = store.resolve(spark, BM25_STORE, prefix)
 
     def plan(sess_, queries_):
         return _bm25_score(
@@ -1054,64 +984,13 @@ def bm25_store_compact(spark, prefix: str, full: bool = False) -> None:
     2 000-query batch at 20 M docs); after a full compact the sorted
     bucketed scan feeds the join directly (the session default
     ``bucketedTableScan.outputOrdering`` + one file per bucket).  Cost
-    is one O(corpus) rewrite — ONE-PASS since round 18: each table is
-    written directly from a forced-bucketed scan of its current
-    physical generation into the alternate physical name and the old
-    generation dropped (operators/genswap.py), instead of the old
-    snapshot(localCheckpoint)+overwrite that materialized every row
-    TWICE (the in-place overwrite needed the snapshot because Spark
-    refuses to overwrite a table it reads from).  The bucketed scan
-    gives one task per bucket and zero exchange; readers resolve the
-    current generation through ``_bm25_store_phys``."""
-    from .actions import run_actions
-    from .dedup import _table_num_buckets
-    from .genswap import compact_swap, current_table, forced_bucketed_scan
-
-    tp, tl, td = _bm25_store_tables(prefix)
-
-    # each table's one-pass rewrite touches only its own logical table;
-    # the three run concurrently (guide §2.6) — a full compact is the
-    # most job-dense operation in the store lifecycle (q469 trips two of
-    # them on purpose) and the per-table rewrites otherwise serialize
-    # their jobs and driver commit gaps.
-    def compact_df():
-        nb = _table_num_buckets(spark, current_table(spark, td))
-
-        def write(cur_df, target, path):
-            merged = cur_df.groupBy("token").agg(
-                F.sum("dfreq").cast("bigint").alias("dfreq")
-            )
-            w = merged.write.mode("overwrite").bucketBy(
-                nb, "token"
-            ).sortBy("token")
-            if path is not None:
-                w = w.option("path", path)
-            w.saveAsTable(target)
-
-        compact_swap(spark, td, write)
-
-    def compact_table(table, key):
-        def run():
-            nb_t = _table_num_buckets(spark, current_table(spark, table))
-
-            def write(cur_df, target, path):
-                w = cur_df.write.mode("overwrite").bucketBy(
-                    nb_t, key
-                ).sortBy(key)
-                if path is not None:
-                    w = w.option("path", path)
-                w.saveAsTable(target)
-
-            compact_swap(spark, table, write)
-
-        return run
-
-    with forced_bucketed_scan(spark):
-        if full:
-            run_actions(
-                compact_df,
-                compact_table(tp, "token"),
-                compact_table(tl, "doc_id"),
-            )
-        else:
-            compact_df()
+    is one O(corpus) rewrite: each table swaps generation in one pass
+    (:func:`store.compact`), the three concurrently."""
+    rewrite = {
+        _DF: lambda df: df.groupBy("token").agg(
+            F.sum("dfreq").cast("bigint").alias("dfreq")
+        )
+    }
+    if full:
+        rewrite.update({_POSTINGS: None, _DL: None})
+    store.compact(spark, prefix, rewrite)

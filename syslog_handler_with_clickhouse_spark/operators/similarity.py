@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot, norm, sign_bucket, to_double
+from . import store
 
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -789,25 +790,13 @@ def _ivfpq_encode_qv(
 # q389's exact-top-10 SQL verbatim).
 
 
-def _ivfpq_store_tables(prefix: str) -> tuple[str, str, str, str]:
-    return (
-        f"{prefix}_v",
-        f"{prefix}_codes",
-        f"{prefix}_cent",
-        f"{prefix}_books",
-    )
-
-
-def _ivfpq_store_phys(spark, prefix: str) -> tuple[str, str, str, str]:
-    """The PHYSICAL tables currently backing the store: compaction
-    alternates v and codes between ``t`` and ``t__alt``
-    (operators/genswap.py); cent/books are frozen at init and never
-    swap, but resolve uniformly."""
-    from .genswap import current_table
-
-    return tuple(
-        current_table(spark, t) for t in _ivfpq_store_tables(prefix)
-    )
+_V = store.Table("v", "vid bigint, qv array<bigint>", ("vid",))
+_CODES = store.Table(
+    "codes", "vid bigint, m int, code int, cluster bigint", partition="cluster"
+)
+_CENT = store.Table("cent", "cell bigint, cv array<bigint>")
+_BOOKS = store.Table("books", "m int, code int, cv array<bigint>")
+IVFPQ_STORE = (_V, _CODES, _CENT, _BOOKS)
 
 
 def ivfpq_store_init(
@@ -841,12 +830,6 @@ def ivfpq_store_init(
     contract), so recall — not bit-equality with the unsampled build —
     is the acceptance measure, exactly as for any frozen-quantizer
     index (the q464/q466 ≥ 7/10 recall boolean)."""
-    tv, tc, tn, tb = _ivfpq_store_tables(prefix)
-    # a RE-init over a previously compacted store retires any __alt
-    # generations up front (the base names created below win the
-    # resolver's preference; this reclaims orphans)
-    for t in (tv, tc):
-        spark.sql(f"DROP TABLE IF EXISTS {t}__alt")
     if train_sample_mod is not None and train_sample_mod > 1:
         quant = ivfpq_build(
             train_emb.filter(F.col(id_col) % train_sample_mod == 0),
@@ -864,49 +847,28 @@ def ivfpq_store_init(
             train_emb, n_cells=n_cells, m_sub=m_sub, n_codes=n_codes,
             id_col=id_col, vec_col=vec_col, dim=dim,
         )
-    # the four table writes run concurrently (guide §2.6,
-    # operators/actions.py — init is one-shot create, no sentinel-order
-    # contract like the insert path's: a partial init leaves a missing
-    # table that every later insert/scan fails on loudly).  No
-    # corpus-scale checkpoints here (round 17): cent and books are
-    # materialized INSIDE the build (per-iteration checkpoints in
-    # ivfpq_build/pq_codebooks), so the v plan is a pure quantize
-    # projection and the codes plan encodes against tiny checkpointed
-    # quantizers — each is consumed by exactly ONE table write, and the
-    # old eager DISK_ONLY checkpoints of both just doubled the init's
-    # corpus-scale I/O (write-to-checkpoint + write-to-table).
-    from .actions import run_actions
-
-    wv = (
-        idx["v"]
-        .repartition(num_buckets, "vid")
-        .write.mode("overwrite")
-        .bucketBy(num_buckets, "vid")
-        .sortBy("vid")
-    )
-    # repartition onto the cluster key so each partition dir starts at
-    # ONE file (the insert/compact discipline) — otherwise the init
-    # write leaves one file per write task per dir and the file-depth
-    # telemetry starts at write-width instead of 1
-    wc = (
-        idx["codes"]
-        .select("vid", "m", "code", "cluster")
-        .repartition(max(int(n_cells), 1), "cluster")
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-    )
-    wn = idx["cent"].write.mode("overwrite")
-    wb = idx["books"].write.mode("overwrite")
-    if location is not None:
-        wv = wv.option("path", f"{location}/{tv}")
-        wc = wc.option("path", f"{location}/{tc}")
-        wn = wn.option("path", f"{location}/{tn}")
-        wb = wb.option("path", f"{location}/{tb}")
-    run_actions(
-        lambda: wv.saveAsTable(tv),
-        lambda: wc.saveAsTable(tc),
-        lambda: wn.saveAsTable(tn),
-        lambda: wb.saveAsTable(tb),
+    # the four table writes run concurrently (store.create — init is
+    # one-shot create, no sentinel-order contract like the insert
+    # path's: a partial init leaves a missing table that every later
+    # insert/scan fails on loudly).  No corpus-scale checkpoints here
+    # (round 17): cent and books are materialized INSIDE the build
+    # (per-iteration checkpoints in ivfpq_build/pq_codebooks), so the v
+    # plan is a pure quantize projection and the codes plan encodes
+    # against tiny checkpointed quantizers — each is consumed by
+    # exactly ONE table write, and the old eager DISK_ONLY checkpoints
+    # of both just doubled the init's corpus-scale I/O
+    # (write-to-checkpoint + write-to-table).  The codes write is
+    # aligned on the cluster key, so each partition dir starts at ONE
+    # file and the file-depth telemetry starts at 1.
+    store.create(
+        spark, IVFPQ_STORE, prefix, num_buckets, location,
+        frames={
+            _V: idx["v"],
+            _CODES: idx["codes"].select("vid", "m", "code", "cluster"),
+            _CENT: idx["cent"],
+            _BOOKS: idx["books"],
+        },
+        width=max(int(n_cells), 1),
     )
 
 
@@ -946,13 +908,7 @@ def ivfpq_store_insert(
     either way when requested) and fires :func:`ivfpq_store_compact`
     once the worse one exceeds the threshold — scans are bit-equal
     before/after (pure layout), so this is pure I/O scheduling."""
-    from .dedup import (
-        _bucket_file_depth,
-        _partition_file_depth,
-        _table_num_buckets,
-    )
-
-    tv, tc, tn, tb = _ivfpq_store_phys(spark, prefix)
+    tv, tc, tn, tb = store.resolve(spark, IVFPQ_STORE, prefix)
     if assert_new:
         bids = (
             emb.select(F.col(id_col).cast("bigint").alias("vid"))
@@ -1000,7 +956,6 @@ def ivfpq_store_insert(
     v_new, codes_new = _ivfpq_encode(
         emb, spark.table(tn), spark.table(tb), m_sub, id_col, vec_col, dim
     )
-    nb = _table_num_buckets(spark, tv)
     n_cells = spark.table(tn).count()
     # v writes FIRST and the codes append only starts after it — the
     # replay/torn guard probes v as the sentinel table, which is only
@@ -1017,24 +972,16 @@ def ivfpq_store_insert(
     def ckpt_codes():
         box["codes"] = codes_new.localCheckpoint(eager=True)
 
-    run_actions(
-        ckpt_codes,
-        lambda: v_new.repartition(nb, "vid")
-        .write.mode("append")
-        .bucketBy(nb, "vid")
-        .sortBy("vid")
-        .saveAsTable(tv),
+    run_actions(ckpt_codes, lambda: store.append(spark, _V, tv, v_new))
+    store.append(
+        spark, _CODES, tc,
+        box["codes"].select("vid", "m", "code", "cluster"),
+        max(int(n_cells), 1),
     )
-    codes_new = box["codes"]
-    codes_new.select("vid", "m", "code", "cluster").repartition(
-        max(int(n_cells), 1), "cluster"
-    ).write.mode("append").partitionBy("cluster").saveAsTable(tc)
 
     if stats is None and auto_compact_files is None:
         return
-    depth = max(
-        _bucket_file_depth(spark, tv), _partition_file_depth(spark, tc)
-    )
+    depth = max(store.depth(spark, _V, tv), store.depth(spark, _CODES, tc))
     compact = auto_compact_files is not None and depth > auto_compact_files
     if stats is not None:
         stats.append(
@@ -1061,7 +1008,7 @@ def ivfpq_store_repair(spark, prefix: str) -> dict:
     quantizers make the re-encode bit-identical to what the crashed
     insert would have written).  Round 17, closing the round-16
     verdict's durability gap.  Returns ``{"repaired": n}``."""
-    tv, tc, tn, tb = _ivfpq_store_phys(spark, prefix)
+    tv, tc, tn, tb = store.resolve(spark, IVFPQ_STORE, prefix)
     books = spark.table(tb)
     m_sub = int(books.agg(F.max("m")).collect()[0][0]) + 1
     d_sub = int(
@@ -1078,9 +1025,10 @@ def ivfpq_store_repair(spark, prefix: str) -> dict:
         missing, spark.table(tn), books, m_sub, m_sub * d_sub
     )
     n_cells = spark.table(tn).count()
-    codes_new.select("vid", "m", "code", "cluster").repartition(
-        max(int(n_cells), 1), "cluster"
-    ).write.mode("append").partitionBy("cluster").saveAsTable(tc)
+    store.append(
+        spark, _CODES, tc, codes_new.select("vid", "m", "code", "cluster"),
+        max(int(n_cells), 1),
+    )
     return {"repaired": n}
 
 
@@ -1092,63 +1040,22 @@ def ivfpq_store_compact(spark, prefix: str) -> None:
     cent/books quantizers are frozen at init and never need
     compaction.  Cost is one O(corpus) rewrite — the LSM amortization,
     paid per compaction window rather than per insert; scans are
-    bit-equal before/after (pure layout, unit-pinned).  ONE-PASS since
-    round 18 (operators/genswap.py): each table is written directly
-    from a scan of its current physical generation into the alternate
-    physical name and the old generation dropped, instead of the old
-    snapshot(localCheckpoint)+overwrite that materialized every row
-    TWICE.  (A write-to-temp + catalog RENAME was tried round 17 and
-    REVERTED: repeated rename cycles silently stop swapping the data
-    dir on this Spark build — the alternating-name swap never renames.)
-    Readers resolve the current generation via ``_ivfpq_store_phys``."""
-    from .actions import run_actions
-    from .dedup import _table_num_buckets
-    from .genswap import compact_swap, current_table, forced_bucketed_scan
-
-    tv, tc, tn, _ = _ivfpq_store_tables(prefix)
-
-    # the v and codes rewrites touch different logical tables — they
-    # run concurrently (guide §2.6), overlapping each rewrite's jobs
-    # and driver commit gap with the other's.
-    def compact_v():
-        nb = _table_num_buckets(spark, current_table(spark, tv))
-
-        def write(cur_df, target, path):
-            w = cur_df.write.mode("overwrite").bucketBy(
-                nb, "vid"
-            ).sortBy("vid")
-            if path is not None:
-                w = w.option("path", path)
-            w.saveAsTable(target)
-
-        compact_swap(spark, tv, write)
-
-    def compact_codes():
-        # width from the frozen quantizer (n_cells) — cheaper than a
-        # distinct over the codes rows, same repartition target
-        n_cells = spark.table(current_table(spark, tn)).count()
-
-        def write(cur_df, target, path):
-            w = (
-                cur_df.repartition(max(int(n_cells), 1), "cluster")
-                .write.mode("overwrite")
-                .partitionBy("cluster")
-            )
-            if path is not None:
-                w = w.option("path", path)
-            w.saveAsTable(target)
-
-        compact_swap(spark, tc, write)
-
-    with forced_bucketed_scan(spark):
-        run_actions(compact_v, compact_codes)
+    bit-equal before/after (pure layout, unit-pinned).  Each table
+    swaps generation in one pass (:func:`store.compact`), the two
+    concurrently."""
+    # codes width from the frozen quantizer (n_cells) — cheaper than a
+    # distinct over the codes rows, same repartition target
+    tn = store.resolve(spark, IVFPQ_STORE, prefix)[2]
+    n_cells = spark.table(tn).count()
+    store.compact(spark, prefix, {_V: None, _CODES: None},
+                  width=max(int(n_cells), 1))
 
 
 def ivfpq_store_index(spark, prefix: str) -> dict:
     """The stored index as the dict :func:`ivfpq_scan` expects — each
     frame a (bucketed/partitioned) table scan; cent/books tiny and
     broadcast by the scan."""
-    tv, tc, tn, tb = _ivfpq_store_phys(spark, prefix)
+    tv, tc, tn, tb = store.resolve(spark, IVFPQ_STORE, prefix)
     return {
         "v": spark.table(tv),
         "codes": spark.table(tc),

@@ -717,6 +717,7 @@ def test_incremental_dedup_store_multihop_chain(spark, tmp_path):
         for t in (f"{prefix}_buckets", f"{prefix}_labels",
                   f"{prefix}_relabel"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+            spark.sql(f"DROP TABLE IF EXISTS {t}__alt")
 
 
 def test_incremental_dedup_store_joins_shuffle_free(spark, tmp_path):
@@ -761,6 +762,7 @@ def test_incremental_dedup_store_joins_shuffle_free(spark, tmp_path):
         for t in (f"{prefix}_buckets", f"{prefix}_labels",
                   f"{prefix}_relabel"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+            spark.sql(f"DROP TABLE IF EXISTS {t}__alt")
 
 
 def test_incremental_survivors_merge_updates_best(spark):
@@ -916,6 +918,7 @@ def test_incremental_dedup_store_auto_compact_fires(spark, tmp_path):
         for t in (f"{prefix}_buckets", f"{prefix}_labels",
                   f"{prefix}_relabel"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+            spark.sql(f"DROP TABLE IF EXISTS {t}__alt")
 
 
 def test_incremental_dedup_store_compact_elides_stored_sort(spark, tmp_path):
@@ -929,10 +932,12 @@ def test_incremental_dedup_store_compact_elides_stored_sort(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from syslog_handler_with_clickhouse_spark.operators.dedup import (
+        DEDUP_STORE,
         incremental_dedup_store_compact,
         incremental_dedup_store_init,
         incremental_dedup_store_insert,
     )
+    from syslog_handler_with_clickhouse_spark.operators.store import resolve
 
     prefix = "t15sort"
     incremental_dedup_store_init(
@@ -948,6 +953,8 @@ def test_incremental_dedup_store_compact_elides_stored_sort(spark, tmp_path):
             ),
         )
         incremental_dedup_store_compact(spark, prefix)
+        # the compact swapped the labels generation — plan the current one
+        labels = resolve(spark, DEDUP_STORE, prefix)[1]
         old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
         old_ord = spark.conf.get(key, "false")
@@ -956,7 +963,7 @@ def test_incremental_dedup_store_compact_elides_stored_sort(spark, tmp_path):
             spark.conf.set(key, "true")
             batch = spark.createDataFrame([(1,), (7,)], "node long")
             plan = (
-                batch.join(spark.table(f"{prefix}_labels"), "node")
+                batch.join(spark.table(labels), "node")
                 ._jdf.queryExecution()
                 .executedPlan()
                 .toString()
@@ -972,6 +979,7 @@ def test_incremental_dedup_store_compact_elides_stored_sort(spark, tmp_path):
         for t in (f"{prefix}_buckets", f"{prefix}_labels",
                   f"{prefix}_relabel"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+            spark.sql(f"DROP TABLE IF EXISTS {t}__alt")
 
 
 def test_incremental_dedup_store_file_depth_auto_compact(spark, tmp_path):
@@ -986,12 +994,16 @@ def test_incremental_dedup_store_file_depth_auto_compact(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from syslog_handler_with_clickhouse_spark.operators.dedup import (
-        _bucket_file_depth,
+        DEDUP_STORE,
         dedup_components,
         incremental_dedup_store_init,
         incremental_dedup_store_insert,
         incremental_dedup_store_labels,
         minhash_lsh_star_edges,
+    )
+    from syslog_handler_with_clickhouse_spark.operators.store import (
+        _bucket_file_depth,
+        resolve,
     )
 
     words = [f"w{i}" for i in range(1000)]
@@ -1020,8 +1032,10 @@ def test_incremental_dedup_store_file_depth_auto_compact(spark, tmp_path):
             )
         # append 1: depth 1, no compact; appends 2/3: depth 2 -> compact
         assert [s["file_depth"] for s in stats] == [1, 2, 2]
-        assert _bucket_file_depth(spark, f"{prefix}_buckets") == 1
-        assert _bucket_file_depth(spark, f"{prefix}_labels") == 1
+        # the full compact swapped generations — measure the current ones
+        tb, tl, _ = resolve(spark, DEDUP_STORE, prefix)
+        assert _bucket_file_depth(spark, tb) == 1
+        assert _bucket_file_depth(spark, tl) == 1
 
         full = dedup_components(
             minhash_lsh_star_edges(corpus, "text", "doc_id")
@@ -1042,6 +1056,7 @@ def test_incremental_dedup_store_file_depth_auto_compact(spark, tmp_path):
         for t in (f"{prefix}_buckets", f"{prefix}_labels",
                   f"{prefix}_relabel"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+            spark.sql(f"DROP TABLE IF EXISTS {t}__alt")
 
 
 def test_file_depth_guards_are_loud():
@@ -1052,7 +1067,7 @@ def test_file_depth_guards_are_loud():
     touch spark.table(t).inputFiles()."""
     import pytest
 
-    from syslog_handler_with_clickhouse_spark.operators.dedup import (
+    from syslog_handler_with_clickhouse_spark.operators.store import (
         _bucket_file_depth,
         _partition_file_depth,
     )

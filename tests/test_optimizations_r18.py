@@ -178,14 +178,15 @@ def test_compact_swap_repeated_cycles_keep_relayouting(spark, tmp_path):
     alternating-generation swap must re-layout on EVERY cycle: depth
     returns to 1, values stay bit-equal, and exactly one physical
     generation exists per logical table after each compact."""
-    from syslog_handler_with_clickhouse_spark.operators.dedup import (
-        _bucket_file_depth,
-    )
     from syslog_handler_with_clickhouse_spark.operators.retrieval import (
-        _bm25_store_phys,
+        BM25_STORE,
         bm25_store_compact,
         bm25_store_insert,
         bm25_store_topk,
+    )
+    from syslog_handler_with_clickhouse_spark.operators.store import (
+        _bucket_file_depth,
+        resolve,
     )
 
     prefix = "t18swapcycles"
@@ -207,7 +208,7 @@ def test_compact_swap_repeated_cycles_keep_relayouting(spark, tmp_path):
                 )
             )
             bm25_store_compact(spark, prefix, full=True)
-            tp, tl, td = _bm25_store_phys(spark, prefix)
+            tp, tl, td = resolve(spark, BM25_STORE, prefix)
             # generations alternate and exactly one physical table
             # exists per logical name
             suffix = "__alt" if cycle % 2 == 0 else ""
@@ -249,11 +250,12 @@ def test_compact_swap_crash_window_serves_and_recovers(spark, tmp_path):
     deterministic preference, and the next compact must reclaim the
     orphan."""
     from syslog_handler_with_clickhouse_spark.operators.retrieval import (
-        _bm25_store_phys,
+        BM25_STORE,
         bm25_store_compact,
         bm25_store_fsck,
         bm25_store_topk,
     )
+    from syslog_handler_with_clickhouse_spark.operators.store import resolve
 
     prefix = "t18swapcrash"
     df = _bm25_fixture(spark, tmp_path, prefix)
@@ -281,7 +283,7 @@ def test_compact_swap_crash_window_serves_and_recovers(spark, tmp_path):
         assert spark.catalog.tableExists(tp_alt)
         # resolver picks the base name deterministically; serving is
         # value-correct and the store consistent
-        assert _bm25_store_phys(spark, prefix)[0] == f"{prefix}_postings"
+        assert resolve(spark, BM25_STORE, prefix)[0] == f"{prefix}_postings"
         got = sorted(
             map(
                 tuple,

@@ -700,9 +700,10 @@ def test_bm25_store_matches_scan_and_compacts(spark, tmp_path):
         bm25_store_compact(spark, prefix, full=True)
         # compaction swaps generations — resolve the physical table
         from syslog_handler_with_clickhouse_spark.operators.retrieval import (
-            _bm25_store_phys,
+            BM25_STORE,
         )
-        assert spark.table(_bm25_store_phys(spark, prefix)[2]).filter(
+        from syslog_handler_with_clickhouse_spark.operators.store import resolve
+        assert spark.table(resolve(spark, BM25_STORE, prefix)[2]).filter(
             F.col("token") == "dog"
         ).count() == 1
         got2 = sorted(
@@ -841,7 +842,7 @@ def test_bm25_store_auto_compact_telemetry_and_assert_new(spark, tmp_path):
     BEFORE any write."""
     from pyspark.sql import functions as F
 
-    from syslog_handler_with_clickhouse_spark.operators.dedup import (
+    from syslog_handler_with_clickhouse_spark.operators.store import (
         _bucket_file_depth,
     )
     from syslog_handler_with_clickhouse_spark.operators.retrieval import (
@@ -881,9 +882,10 @@ def test_bm25_store_auto_compact_telemetry_and_assert_new(spark, tmp_path):
         assert [s["compacted"] for s in stats] == [False, True, True]
         assert [s["file_depth"] for s in stats] == [1, 2, 2]
         from syslog_handler_with_clickhouse_spark.operators.retrieval import (
-            _bm25_store_phys,
+            BM25_STORE,
         )
-        phys = _bm25_store_phys(spark, prefix)
+        from syslog_handler_with_clickhouse_spark.operators.store import resolve
+        phys = resolve(spark, BM25_STORE, prefix)
         assert _bucket_file_depth(spark, phys[0]) == 1
         # df partials folded to one row per token by the last compact
         assert spark.table(phys[2]).filter(

@@ -513,7 +513,7 @@ def test_ivfpq_store_compact_auto_and_assert_new(spark, tmp_path):
     vec_id batch before any write."""
     from pyspark.sql import functions as F
 
-    from syslog_handler_with_clickhouse_spark.operators.dedup import (
+    from syslog_handler_with_clickhouse_spark.operators.store import (
         _bucket_file_depth,
         _partition_file_depth,
     )
@@ -544,9 +544,10 @@ def test_ivfpq_store_compact_auto_and_assert_new(spark, tmp_path):
         assert all(s["file_depth"] == 2 for s in stats)
         assert all(s["batch_vecs"] > 0 for s in stats)
         from syslog_handler_with_clickhouse_spark.operators.similarity import (
-            _ivfpq_store_phys,
+            IVFPQ_STORE,
         )
-        phys = _ivfpq_store_phys(spark, prefix)
+        from syslog_handler_with_clickhouse_spark.operators.store import resolve
+        phys = resolve(spark, IVFPQ_STORE, prefix)
         assert _bucket_file_depth(spark, phys[0]) == 1
         assert _partition_file_depth(spark, phys[1]) == 1
         pred = F.col("vid") % 10 == 0
