@@ -57,10 +57,6 @@ def stopword_hits(text: Column, lang: str) -> Column:
     return F.size(F.filter(words(text), lambda w: w.isin(stop)))
 
 
-def lang_scores(text: Column) -> list[tuple[str, Column]]:
-    return [(lang, stopword_hits(text, lang)) for lang in LANG_STOPWORDS]
-
-
 def quality_columns(text: Column) -> dict[str, Column]:
     """Quality-scoring metrics: lengths, ratios — all integer-derived so
     the double divisions match the oracle bit-for-bit."""

@@ -1,5 +1,5 @@
-"""Unicode normalization family — ClickHouse ``normalizeUTF8NFC`` /
-``normalizeUTF8NFD`` analogues plus accent stripping, as Arrow-batched
+"""Unicode normalization family — the ClickHouse ``normalizeUTF8NFC``
+analogue plus accent stripping, as Arrow-batched
 pandas UDFs over stdlib ``unicodedata`` (the UCD tables ship with
 CPython; Spark has no native normalizer).
 
@@ -45,12 +45,6 @@ def nfc_col(c):
     from pyspark.sql.functions import pandas_udf
 
     return pandas_udf(_norm_series("NFC"), "string")(c)
-
-
-def nfd_col(c):
-    from pyspark.sql.functions import pandas_udf
-
-    return pandas_udf(_norm_series("NFD"), "string")(c)
 
 
 def strip_accents_col(c):

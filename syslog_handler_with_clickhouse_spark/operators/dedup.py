@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, words
+from ..session import fork, reroot
 from . import store
 
 # --------------------------------------------------------------- portable hash
@@ -117,12 +118,7 @@ def _spread(df: DataFrame, id_col: str) -> DataFrame:
     for the data scale — a 100 TB corpus repartitions to the same width
     every other shuffle in the job uses, and AQE coalesces any excess.
     """
-    spark = df.sparkSession
-    target = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        _size_floor(df),
-    )
+    target = max(_session_width(df.sparkSession), _size_floor(df))
     return df.repartition(target, F.col(id_col))
 
 
@@ -213,6 +209,44 @@ def _size_floor(df: DataFrame) -> int:
     except Exception:
         pass  # clamp is best-effort; the unclamped floor still applies
     return min(_FLOOR_CAP, -(-size // _FLOOR_TARGET_BYTES))
+
+
+def _session_width(spark) -> int:
+    """The width the session's own shuffles run at."""
+    return max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+    )
+
+
+def _width_fork(spark, floor: int):
+    """A fork of ``spark`` (:func:`~..session.fork`) whose shuffles run
+    at ``floor`` partitions when ``floor`` exceeds the session width,
+    else None — the plan then stays in the caller session, unchanged.
+
+    The fork also scopes a 4 MB AQE advisory: AQE's default 64 MB
+    (compressed bytes — 3-5× that in memory) would coalesce the width
+    straight back into the spill it exists to prevent (measured 6 GB of
+    memory spill at 10 M docs with the width but the default advisory);
+    4 MB ≈ 15-20 MB in memory per task keeps even the CC loop's
+    convergence probes under the execution share.  Conf binds at execution, so the widened result must be
+    materialized inside the fork."""
+    if floor <= _session_width(spark):
+        return None
+    return fork(spark, {
+        "spark.sql.shuffle.partitions": str(floor),
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(4 << 20),
+    })
+
+
+def _materialized(df: DataFrame, spark) -> DataFrame:
+    """``df`` computed now, in its own (width-fork) session, and handed
+    back as a frame of the caller session ``spark``."""
+    from pyspark import StorageLevel
+
+    return reroot(df.localCheckpoint(
+        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+    ), spark)
 
 
 def jaccard_pairs(
@@ -451,11 +485,7 @@ def minhash_lsh_pairs(
     if sig is None:
         sig = minhash_signatures(df, text_col, id_col, n)
     bands = minhash_bands(sig)
-    spark = bands.sparkSession
-    sess = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+    sess = _session_width(bands.sparkSession)
     width = _size_floor(bands)
     if width > sess:
         bands = bands.repartition(width, "band", "bh")
@@ -568,11 +598,7 @@ def minhash_lsh_star_edges(
     if sig is None:
         sig = minhash_signatures(df, text_col, id_col, n)
     bands = minhash_bands(sig)
-    spark = bands.sparkSession
-    sess = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+    sess = _session_width(bands.sparkSession)
     width = _size_floor(bands)
     if width > sess:
         bands = bands.repartition(width, "band", "bh")
@@ -1052,21 +1078,15 @@ def dedup_components(
     appended — used by scripts/cc_scale_bench.py to record rounds-to-
     converge, per-round wall time, and edge-set contraction at scale.
 
-    Concurrency note: when the derived width exceeds the session's,
-    the loop sets ``spark.sql.shuffle.partitions`` and the AQE
-    advisory SESSION-WIDE for its duration (restored in the finally) —
-    conf scoping is the only way the width reaches every exchange the
-    loop plans, including the convergence probes, but it means a
-    CONCURRENT query on the same SparkSession plans under the widened
-    conf.  Harmless for correctness (widths, not semantics) and only
-    reachable on big inputs; callers running a multi-threaded driver
-    against one session should serialize around this operator."""
+    When the edge floor exceeds the session width, the loop runs in a
+    width fork (:func:`_width_fork`) — the width reaches every exchange
+    the loop plans, convergence probes included — and the labels are
+    materialized there."""
     import time as _time
 
     from pyspark import StorageLevel
 
     spark = pairs.sparkSession
-    sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # NARROW canonical projection first (no shuffle): checkpoint it so
     # a lazy candidate plan (q334 passes the raw LSH frame) computes
     # once, and its count — not Catalyst stats, which go unknown
@@ -1074,7 +1094,7 @@ def dedup_components(
     # checkpoint stores SERIALIZED (MEMORY_AND_DISK): deserialized row
     # objects for 10⁸ edges are what blew the 8 GB default heap in the
     # round-12 rehearsal.  The canonical DEDUPE then runs inside the
-    # widened scope — at 32 session partitions it was the rehearsal's
+    # width fork — at 32 session partitions it was the rehearsal's
     # residual 1.1 GB spill (1.1 M-row hash-agg tasks).
     raw = (
         pairs.select(
@@ -1145,107 +1165,82 @@ def dedup_components(
             )
         _free_checkpoint(raw, blocking=True)
         return out
-    width = max(
-        sess_parts,
-        spark.sparkContext.defaultParallelism,
-        min(8192, -(-n_raw // _CC_EDGES_PER_PARTITION)),
+    wide = _width_fork(
+        spark, min(_FLOOR_CAP, -(-n_raw // _CC_EDGES_PER_PARTITION))
     )
-    # AQE coalesces conf-width shuffles back toward its 64 MB advisory
-    # (COMPRESSED bytes — 3-5× that in-memory), which re-creates the
-    # very spill the width prevents (measured: 6 GB mem-spill at 10 M
-    # docs with width=238 but default advisory).  Scope a smaller
-    # advisory with the width; both restored in the finally.
-    adv_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    sess_adv = spark.conf.get(adv_key)
-    try:
-        if width > sess_parts:
-            spark.conf.set("spark.sql.shuffle.partitions", str(width))
-            # 4 MB compressed ≈ 15-20 MB in-memory per task: sized so
-            # the exceptAll convergence probes stay under the execution
-            # share even with the loop's serialized checkpoints pinning
-            # the storage pool (the last measured spill source)
-            spark.conf.set(adv_key, str(4 << 20))
-        # canonical dedupe is an edge-sized aggregate: runs INSIDE the
-        # widened scope.  (No separate node frame: the star fixpoint
-        # below carries every node — see the convergence branch.  No
-        # count job either: prev_n starts unknown, so round 1 skips
-        # the set-equality probe — it can never be converged-at-entry
-        # anyway unless the input was already stars, which round 2
-        # detects at one extra cheap round.)
-        edges = (
-            raw.filter(F.col("u") != F.col("v"))
-            .dropDuplicates(["u", "v"])
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    loop = wide or spark
+    # canonical dedupe is an edge-sized aggregate: runs INSIDE the
+    # width fork.  (No separate node frame: the star fixpoint below
+    # carries every node — see the convergence branch.  No count job
+    # either: prev_n starts unknown, so round 1 skips the set-equality
+    # probe — it can never be converged-at-entry anyway unless the
+    # input was already stars, which round 2 detects at one extra cheap
+    # round.)
+    edges = (
+        reroot(raw, loop).filter(F.col("u") != F.col("v"))
+        .dropDuplicates(["u", "v"])
+        .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    )
+    prev_n = -1
+    _free_checkpoint(raw)
+    for rnd in range(max_iter):
+        t0 = _time.perf_counter()
+        sym = edges.unionByName(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        prev_n = -1
-        _free_checkpoint(raw)
-        for rnd in range(max_iter):
-            t0 = _time.perf_counter()
-            sym = edges.unionByName(
-                edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        new = _star_half_round(
+            _star_half_round(sym, large=True), large=False
+        ).localCheckpoint(
+            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        )
+        n_new = new.count()
+        # converged iff the canonical edge set is unchanged: equal
+        # counts (free — the count doubles as the lineage action) then
+        # a 1-row set-difference probe
+        changed = 1
+        if n_new == prev_n:
+            changed = new.exceptAll(edges).limit(1).count()
+        if stats is not None:
+            stats.append(
+                {
+                    "round": rnd + 1,
+                    "sec": round(_time.perf_counter() - t0, 2),
+                    "edges": n_new,
+                    "changed": changed,
+                }
             )
-            new = _star_half_round(
-                _star_half_round(sym, large=True), large=False
-            ).localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
+        old = edges
+        edges, prev_n = new, n_new
+        _free_checkpoint(old)
+        if changed == 0:
+            # the fixpoint is one star per component (Kiveris et al.
+            # Thm 1) and every input node survives each half-round, so
+            # the labels read straight off the star edges: members
+            # appear exactly once as u (comp = v), centers only as v
+            # (comp = self).  No node-universe frame, no label join —
+            # round-12 follow-up that cut the 86 M-row node distinct +
+            # the 43 M⋈43 M final join out of the 50 M-doc rehearsal.
+            # Materialized INSIDE the width fork when one was opened
+            # (deferring it to the caller's next action would run the
+            # union at the caller's small-SF width); small-SF callers
+            # keep a lazy frame — no extra job.
+            members = edges.select(
+                F.col("u").alias("node"), F.col("v").alias("comp")
             )
-            n_new = new.count()
-            # converged iff the canonical edge set is unchanged: equal
-            # counts (free — the count doubles as the lineage action)
-            # then a 1-row set-difference probe
-            changed = 1
-            if n_new == prev_n:
-                changed = new.exceptAll(edges).limit(1).count()
-            if stats is not None:
-                stats.append(
-                    {
-                        "round": rnd + 1,
-                        "sec": round(_time.perf_counter() - t0, 2),
-                        "edges": n_new,
-                        "changed": changed,
-                    }
-                )
-            old = edges
-            edges, prev_n = new, n_new
-            _free_checkpoint(old)
-            if changed == 0:
-                # the fixpoint is one star per component (Kiveris et
-                # al. Thm 1) and every input node survives each
-                # half-round, so the labels read straight off the star
-                # edges: members appear exactly once as u (comp = v),
-                # centers only as v (comp = self).  No node-universe
-                # frame, no label join — round-12 follow-up that cut
-                # the 86 M-row node distinct + the 43 M⋈43 M final
-                # join out of the 50 M-doc rehearsal.  Materialized
-                # INSIDE the widened scope when one was opened
-                # (deferring it to the caller's next action would run
-                # the union at the restored small-SF width); small-SF
-                # callers keep a lazy frame — no extra job.
-                members = edges.select(
-                    F.col("u").alias("node"), F.col("v").alias("comp")
-                )
-                centers = (
-                    edges.select(F.col("v").alias("node"))
-                    .distinct()
-                    .withColumn("comp", F.col("node"))
-                )
-                labels = members.unionByName(centers)
-                if selfs is not None:
-                    # self-pair-only nodes (not touched by any proper
-                    # edge) come back as singleton components
-                    singles = selfs.join(
-                        labels.select("node"), "node", "left_anti"
-                    ).select("node", F.col("node").alias("comp"))
-                    labels = labels.unionByName(singles)
-                if width > sess_parts:
-                    labels = labels.localCheckpoint(
-                        eager=True,
-                        storageLevel=StorageLevel.MEMORY_AND_DISK,
-                    )
-                return labels
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
-        spark.conf.set(adv_key, sess_adv)
+            centers = (
+                edges.select(F.col("v").alias("node"))
+                .distinct()
+                .withColumn("comp", F.col("node"))
+            )
+            labels = members.unionByName(centers)
+            if selfs is not None:
+                # self-pair-only nodes (not touched by any proper edge)
+                # come back as singleton components
+                singles = reroot(selfs, loop).join(
+                    labels.select("node"), "node", "left_anti"
+                ).select("node", F.col("node").alias("comp"))
+                labels = labels.unionByName(singles)
+            return labels if wide is None else _materialized(labels, spark)
     raise RuntimeError(
         f"dedup_components did not converge in {max_iter} rounds"
     )

@@ -43,8 +43,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import TOKEN_RE
+from ..session import reroot
 from . import store
-from .dedup import _size_floor, portable_hash60
+from .dedup import _materialized, _size_floor, _width_fork, portable_hash60
 
 #: ppm scale for the tf-saturation term.
 _SCALE = 1_000_000
@@ -87,11 +88,9 @@ def bm25_topk(
     the operator derives its shuffle width from the plan-estimated
     input instead of trusting the session's small-SF
     ``spark.sql.shuffle.partitions``.  When the floor exceeds the
-    session width, the whole plan is materialized inside a scoped
-    conf (width + 4 MB AQE advisory — conf scoping only binds at an
-    ACTION, and AQE's default 64 MB advisory would re-coalesce the
-    width away) and the returned frame is the checkpointed top-k,
-    which is queries×k rows — tiny.  Motivating measurement
+    session width, the whole plan is materialized inside a width fork
+    (:func:`_width_fork`) and the returned frame is the checkpointed
+    top-k, which is queries×k rows — tiny.  Motivating measurement
     (scripts/bm25_scale_bench.py, 2 000 queries): at session width 32
     the 10 M-doc postings build spilled 7.3 GB to disk and the
     20 M-doc point OOM'd an 8 g heap; with the derived width both run
@@ -146,29 +145,14 @@ def bm25_topk(
                 % (top[0][0] if top else "?", rec["max_df"], hot_token_warn),
                 stacklevel=2,
             )
-    sess = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
     width = _size_floor(tok)
-    if width > sess:
-        from pyspark import StorageLevel
-
-        adv_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        sess_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        sess_adv = spark.conf.get(adv_key)
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", str(width))
-            spark.conf.set(adv_key, str(4 << 20))
-            return _bm25_plan(
-                docs, queries, k=k, max_df_num=max_df_num,
-                max_df_den=max_df_den, max_df_abs=max_df_abs, width=width,
-            ).localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
-            spark.conf.set(adv_key, sess_adv)
+    wide = _width_fork(spark, width)
+    if wide is not None:
+        return _materialized(_bm25_plan(
+            reroot(docs, wide), reroot(queries, wide), k=k,
+            max_df_num=max_df_num, max_df_den=max_df_den,
+            max_df_abs=max_df_abs, width=width,
+        ), spark)
     return _bm25_plan(
         docs, queries, k=k, max_df_num=max_df_num, max_df_den=max_df_den,
         max_df_abs=max_df_abs,
@@ -239,8 +223,9 @@ def _bm25_plan(
     # caching of it blew a 24 g heap at 20 M docs) turns that into ONE
     # tokenize pass + three cheap re-reads of the narrow aggregate.
     # Values are bit-identical — pure materialization.  In the
-    # big-corpus path this runs under the caller's scoped width conf
-    # (conf binds at the action, and the checkpoint IS the action).
+    # big-corpus path this runs in the width fork the inputs were
+    # re-rooted into (conf binds at the action, and the checkpoint IS
+    # the action).
     from pyspark import StorageLevel
 
     postings = postings.localCheckpoint(
@@ -358,9 +343,9 @@ def rrf_hybrid_topk(
 
     Big-corpus posture mirrors :func:`bm25_topk`: when the
     plan-estimated shingle explode exceeds the session shuffle width,
-    the leg-B plan is materialized under a scoped width + 4 MB AQE
-    advisory and the tiny fused top-k is checkpointed; at small SF the
-    plan stays lazy (oracle/plan pins unaffected).
+    the leg-B plan runs in a width fork and the tiny fused top-k is
+    checkpointed there; at small SF the plan stays lazy (oracle/plan
+    pins unaffected).
 
     ``bm25_max_df_abs`` / ``stats`` / ``hot_token_warn`` (round 15)
     pass through to leg A: bm25_boilerplate_r14 measured a 2 %-df
@@ -378,35 +363,19 @@ def rrf_hybrid_topk(
         hot_token_warn=hot_token_warn,
     ).select("query_id", "doc_id", F.col("rank").alias("rk_a"))
 
-    spark = docs.sparkSession
     sh0 = docs.select(
         F.col("doc_id").alias("doc"),
         F.explode(shingles(F.col("text"), 3)).alias("shingle"),
     )
-    sess = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
     width = _size_floor(sh0)
-    if width > sess:
-        from pyspark import StorageLevel
-
-        adv_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-        sess_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        sess_adv = spark.conf.get(adv_key)
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", str(width))
-            spark.conf.set(adv_key, str(4 << 20))
-            b = _rrf_jaccard_leg(
-                docs, queries, k_leg, jaccard_max_df, width=width
-            )
-            fused = _rrf_fuse(a, b, k_out).localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-            return fused
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
-            spark.conf.set(adv_key, sess_adv)
+    spark = docs.sparkSession
+    wide = _width_fork(spark, width)
+    if wide is not None:
+        b = _rrf_jaccard_leg(
+            reroot(docs, wide), reroot(queries, wide), k_leg,
+            jaccard_max_df, width=width,
+        )
+        return _materialized(_rrf_fuse(reroot(a, wide), b, k_out), spark)
     b = _rrf_jaccard_leg(docs, queries, k_leg, jaccard_max_df)
     return _rrf_fuse(a, b, k_out)
 
@@ -905,7 +874,6 @@ def bm25_store_topk(
     max_df_num: int = 1,
     max_df_den: int = 4,
     max_df_abs: int | None = None,
-    force_width: int | None = None,
 ) -> DataFrame:
     """:func:`bm25_topk` semantics over the stored index — pure index
     joins against the bucketed tables (no exchange on any stored
@@ -916,60 +884,22 @@ def bm25_store_topk(
     the rank window) run at the SESSION width, which a small-SF conf
     undersizes for a 20 M-row index — measured 2.4 GB of spill at
     width 32.  When the plan-estimated postings scan exceeds the
-    session width (or ``force_width`` overrides the estimate — the ops
-    and test hook), the plan is materialized under a scoped width +
-    4 MB AQE advisory and the checkpointed queries×k result is
-    returned; at small SF the plan stays lazy (plan pins unaffected).
-
-    Concurrency (round 16, retiring the verdict's race note): the
-    scoped width runs in a FORKED session — ``spark.newSession()``
-    shares the SparkContext and catalog but owns a private SQLConf —
-    instead of a try/finally mutation of the caller session's globals,
-    so two store-topk calls racing on one session can no longer
-    observe each other's width.  The caller's ``queries`` frame
-    crosses sessions through a context-level global temp view (dropped
-    after the eager checkpoint materializes the queries×k result)."""
+    session width, the plan runs in a width fork (:func:`_width_fork`)
+    and the checkpointed queries×k result is returned; at small SF the
+    plan stays lazy (plan pins unaffected)."""
     tp, tl, _ = store.resolve(spark, BM25_STORE, prefix)
-
-    def plan(sess_, queries_):
-        return _bm25_score(
-            sess_.table(tp),
-            sess_.table(tl),
-            bm25_store_df(sess_, prefix),
-            queries_,
-            k=k,
-            max_df_num=max_df_num,
-            max_df_den=max_df_den,
-            max_df_abs=max_df_abs,
-        )
-
-    sess = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+    sess = _width_fork(spark, _size_floor(spark.table(tp))) or spark
+    out = _bm25_score(
+        sess.table(tp),
+        sess.table(tl),
+        bm25_store_df(sess, prefix),
+        reroot(queries, sess),
+        k=k,
+        max_df_num=max_df_num,
+        max_df_den=max_df_den,
+        max_df_abs=max_df_abs,
     )
-    width = force_width if force_width is not None else _size_floor(
-        spark.table(tp)
-    )
-    if width > sess:
-        from uuid import uuid4
-
-        from pyspark import StorageLevel
-
-        ns = spark.newSession()
-        ns.conf.set("spark.sql.shuffle.partitions", str(width))
-        ns.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(4 << 20)
-        )
-        vname = f"bm25_store_q_{uuid4().hex}"
-        queries.createOrReplaceGlobalTempView(vname)
-        try:
-            out = plan(ns, ns.table(f"global_temp.{vname}"))
-            return out.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-        finally:
-            spark.catalog.dropGlobalTempView(vname)
-    return plan(spark, queries)
+    return out if sess is spark else _materialized(out, spark)
 
 
 def bm25_store_compact(spark, prefix: str, full: bool = False) -> None:

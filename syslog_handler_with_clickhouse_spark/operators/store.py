@@ -53,12 +53,12 @@ import os
 import re
 import shutil
 from collections.abc import Callable
-from contextlib import contextmanager
 from dataclasses import dataclass
 from functools import partial
 
 from pyspark.sql import DataFrame
 
+from ..session import fork
 from .actions import run_actions
 
 
@@ -176,28 +176,6 @@ def truncate(spark, table: str) -> None:
     )
 
 
-@contextmanager
-def _forced_bucketed_scan(spark):
-    """Scope ``autoBucketedScan.enabled=false`` around compact writes.
-    On this Spark build a bucketed write from a bucketed scan of the
-    same spec otherwise plans a non-bucketed scan AND elides the
-    aligning repartition (a 128-file table compacted to 79 files,
-    depth ~20); the forced bucketed scan gives one task per bucket,
-    zero exchange and exactly one output file per bucket.  SQL confs
-    are session-wide, so this wraps the whole concurrent batch of
-    swaps — per-swap scoping would race (the first finisher restores
-    the conf while a sibling is still planning).  A concurrent query on
-    the same session plans its bucketed scans un-elided meanwhile
-    (correct, possibly a few more scan tasks)."""
-    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
 def _table_meta(spark, table: str):
     ss = spark._jsparkSession.sessionState()
     return ss.catalog().getTableMetadata(
@@ -217,9 +195,10 @@ def _table_num_buckets(spark, table: str) -> int:
     return _num_buckets(_table_meta(spark, table), table)
 
 
-def _swap(spark, t: Table, fn, name: str, cur: str, meta, width) -> None:
-    """Write ``cur`` (through ``fn``) as the other generation of
-    ``name``, then drop ``cur``."""
+def _swap(spark, scan, t: Table, fn, name: str, cur: str, meta,
+          width) -> None:
+    """Write ``cur`` (through ``fn``), read and written in session
+    ``scan``, as the other generation of ``name``, then drop ``cur``."""
     nxt = _alt(name) if cur == name else name
     external = meta.tableType().name() == "EXTERNAL"
     cur_loc = meta.location().getPath()
@@ -229,7 +208,7 @@ def _swap(spark, t: Table, fn, name: str, cur: str, meta, width) -> None:
     # external location — a dirty location fails CTAS loudly
     spark.sql(f"DROP TABLE IF EXISTS {nxt}")
     shutil.rmtree(tgt_loc, ignore_errors=True)
-    df = spark.table(cur)
+    df = scan.table(cur)
     w = _writer(df if fn is None else fn(df), t, "overwrite",
                 _num_buckets(meta, cur) if t.bucket else width)
     if external:
@@ -250,9 +229,18 @@ def compact(
     written from a scan of its current generation — passed through
     ``rewrite[t]`` when not None — into the other generation, in its
     layout (partitioned tables at ``width``), and the old generation is
-    dropped.  The swaps run concurrently under a forced bucketed scan.
-    Every table is resolved and its location checked before anything
-    is dropped."""
+    dropped.  The swaps run concurrently, and every table is resolved
+    and its location checked before anything is dropped.
+
+    The scans run in a fork with ``autoBucketedScan.enabled=false``.
+    On this Spark build a bucketed write from a bucketed scan of the
+    same spec otherwise plans a non-bucketed scan AND elides the
+    aligning repartition (a 128-file table compacted to 79 files, depth
+    ~20); the forced bucketed scan gives one task per bucket, zero
+    exchange and exactly one output file per bucket."""
+    scan = fork(
+        spark, {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
+    )
     swaps = []
     for t, fn in rewrite.items():
         name = _name(prefix, t)
@@ -265,9 +253,10 @@ def compact(
                 "is not on the local filesystem, and the generation swap "
                 "removes table directories with local file operations"
             )
-        swaps.append(partial(_swap, spark, t, fn, name, cur, meta, width))
-    with _forced_bucketed_scan(spark):
-        run_actions(*swaps)
+        swaps.append(
+            partial(_swap, spark, scan, t, fn, name, cur, meta, width)
+        )
+    run_actions(*swaps)
 
 
 _BUCKET_FILE_RE = re.compile(r"_(\d+)\.c\d+")

@@ -30,6 +30,7 @@ from ..functions import geo as _geo
 from ..operators import dedup, multimodal, similarity
 from ..operators.joins import asof_join
 from ..operators.topk import global_top_k, top_k_per_group
+from ..session import fork, reroot
 from ..sources.testdata import load_table, normalize_events_ts
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -165,9 +166,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def _run_stream(agg: DataFrame, mode: str) -> str:
-    """Execute a streaming DataFrame to completion (availableNow) into a
-    memory sink; returns the sink table name.
+def _stream_fork(spark: SparkSession) -> SparkSession:
+    """A fork of ``spark`` (:func:`~..session.fork`) at the stream
+    shuffle width — start a stream there.
 
     Stateful streaming operators create one checkpointed state store PER
     SHUFFLE PARTITION per micro-batch — a fixed cost independent of data
@@ -175,32 +176,34 @@ def _run_stream(agg: DataFrame, mode: str) -> str:
     streams pay 32 stores' worth of commit overhead (q93, the worst
     case with TWO join state stores, runs 8.5 s at 32 partitions vs
     3.1 s at 8 for identical results).  State partitioning is fixed at
-    the stream's first checkpoint, so the right number is per-stream:
-    set it for the stream's lifetime, restore the batch setting after.
+    the stream's first checkpoint, so the right number is per-stream.
     At 100 TB you'd raise SPARK_GRAFT_STREAM_SHUFFLE to match per-batch
     volume — the per-partition cost stays flat."""
-    spark = agg.sparkSession
-    _STREAM_EXEC_SEQ[0] += 1
-    name = f"stream_exec_{_STREAM_EXEC_SEQ[0]}"
     import os
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
+    return fork(spark, {
+        "spark.sql.shuffle.partitions":
+            os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
+    })
+
+
+def _run_stream(agg: DataFrame, mode: str) -> DataFrame:
+    """Execute a streaming DataFrame to completion (availableNow) into a
+    memory sink, in a stream fork (:func:`_stream_fork`); returns the
+    sink's rows as a frame of ``agg``'s session."""
+    spark = agg.sparkSession
+    sess = _stream_fork(spark)
+    _STREAM_EXEC_SEQ[0] += 1
+    name = f"stream_exec_{_STREAM_EXEC_SEQ[0]}"
+    q = (
+        reroot(agg, sess).writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        q = (
-            agg.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return name
+    q.awaitTermination()
+    return reroot(sess.table(name), spark)
 
 
 _BUCKETED_SEQ = [0]

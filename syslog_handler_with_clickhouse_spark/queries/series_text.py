@@ -143,7 +143,7 @@ def q173(spark, sf_dir):
         .orderBy(F.col("cnt").desc(), F.col("user_id"))
         .limit(5)
     )
-    return spark.table(_run_stream(top, "complete"))
+    return _run_stream(top, "complete")
 
 
 @query(

@@ -26,6 +26,7 @@ from ._common import (  # noqa: F401
     _geo,
     _lang_case_sql,
     _run_stream,
+    _stream_fork,
     _t,
 )
 
@@ -921,21 +922,13 @@ def q242(spark, sf_dir):
             "append"
         ).parquet(store)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
+    q = (
+        reroot(ev, _stream_fork(spark)).writeStream.foreachBatch(sink)
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        q = (
-            ev.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
 
     td = tdigest_merge_quantiles(
         spark.read.parquet(store), ["event_type"], probs, 100.0
@@ -1951,21 +1944,13 @@ def q254(spark, sf_dir):
         ).write.mode("append").parquet(store)
         unpersist_mg(sk)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"),
+    q = (
+        reroot(ev, _stream_fork(spark)).writeStream.foreachBatch(sink)
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        q = (
-            ev.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
 
     parts = spark.read.parquet(store)
     err_total = (

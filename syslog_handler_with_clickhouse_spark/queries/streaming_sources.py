@@ -668,7 +668,7 @@ def q64(spark, sf_dir):
             F.date_format("w.start", TS_S).alias("win_start"), "event_type", "cnt"
         )
     )
-    return spark.table(_run_stream(agg, "complete"))
+    return _run_stream(agg, "complete")
 
 
 @query(
@@ -684,7 +684,7 @@ def q65(spark, sf_dir):
     dedup_keys = ev.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    return spark.table(_run_stream(dedup_keys, "append"))
+    return _run_stream(dedup_keys, "append")
 
 
 @query(
@@ -1083,7 +1083,7 @@ def q77(spark, sf_dir):
         .alias("Severity"),
     )
     flap = flap_detection(logs, threshold=5)
-    return spark.table(_run_stream(flap, "update"))
+    return _run_stream(flap, "update")
 
 
 @query(
@@ -1182,7 +1182,7 @@ def q80(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.date_format("w.start", TS_S).alias("win_start"), "cnt")
     )
-    return spark.table(_run_stream(agg, "complete"))
+    return _run_stream(agg, "complete")
 
 
 @query(
@@ -1222,7 +1222,7 @@ def q81(spark, sf_dir):
             "n_events",
         )
     )
-    return spark.table(_run_stream(agg, "complete"))
+    return _run_stream(agg, "complete")
 
 
 @query(
@@ -1740,7 +1740,7 @@ def q93(spark, sf_dir):
         F.date_format("pur_ts", TSF_S).alias("pur_ts"),
         F.round("value", 2).alias("pur_value"),
     )
-    return spark.table(_run_stream(out, "append"))
+    return _run_stream(out, "append")
 
 
 @query(
@@ -2105,7 +2105,7 @@ def q101(spark, sf_dir):
             F.sum(_dec("value")).cast("double").alias("total_value"),
         )
     )
-    return spark.table(_run_stream(agg, "complete"))
+    return _run_stream(agg, "complete")
 
 
 @query(
@@ -2535,7 +2535,7 @@ def q383(spark, sf_dir):
         F.date_format("pur_ts", TSF_S).alias("pur_ts"),
         F.round("value", 2).alias("pur_value"),
     )
-    return spark.table(_run_stream(out, "append"))
+    return _run_stream(out, "append")
 
 
 @query(
@@ -2618,7 +2618,7 @@ def q384(spark, sf_dir):
         F.date_format("err_ts", TSF_S).alias("err_ts"),
         F.date_format("pur_ts", TSF_S).alias("pur_ts"),
     )
-    return spark.table(_run_stream(out, "append"))
+    return _run_stream(out, "append")
 
 
 @query(
@@ -2686,7 +2686,7 @@ def q401(spark, sf_dir):
         F.date_format("err_ts", TSF_S).alias("err_ts"),
         F.date_format("pur_ts", TSF_S).alias("pur_ts"),
     )
-    return spark.table(_run_stream(out, "append"))
+    return _run_stream(out, "append")
 
 
 @query(

@@ -4,14 +4,16 @@ The reference has no engine configuration beyond micro-batch constants
 (`main.go:19-21`); everything here is Spark-side scale posture: AQE on,
 bounded shuffle partitions for the local harness, Arrow for any
 pandas-exchange path, UTC session time so timestamp semantics are stable
-across engines (the DuckDB oracle is timezone-naive).
+across engines (the DuckDB oracle is timezone-naive).  :func:`fork` is
+how library code scopes a SQL conf without touching the caller's
+session.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime-settable confs we also (re-)apply to externally provided sessions
 # (the correctness driver passes us its own SparkSession).
@@ -75,3 +77,44 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on this build — leave as-is
     return spark
+
+
+def fork(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A private copy of ``spark`` with ``conf`` set on top — the one way
+    library code scopes a SQL conf, like a ClickHouse query's
+    ``SETTINGS`` clause.
+
+    The fork clones the caller's session state: its runtime SQL conf
+    (including every ``spark.conf.set`` made after start-up, e.g. the
+    UTC zone and bucketed-scan ordering from :func:`apply_runtime_conf`),
+    temp views, functions and query listeners. It shares the
+    SparkContext and the catalog. Setting a conf on the fork never
+    touches the caller, so a query running concurrently on the caller
+    session (``run_actions``, another thread) never sees it.
+
+    The rule: a conf binds where a plan is EXECUTED, not where it was
+    built. Run work in the fork by re-rooting its inputs there with
+    :func:`reroot`. A fork-rooted frame that a caller-session query
+    consumes lazily executes under the CALLER's conf, so a result that
+    must be computed under the fork's conf is materialized inside the
+    fork (an eager ``localCheckpoint`` or a finished sink) before it is
+    re-rooted back into the caller."""
+    from pyspark import RDD
+
+    to_df = RDD.toDF  # a new SparkSession object re-points rdd.toDF at itself
+    out = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    RDD.toDF = to_df
+    for k, v in conf.items():
+        out.conf.set(k, v)
+    return out
+
+
+def reroot(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a frame of ``session`` (same rows; the
+    plan now plans and executes under ``session``'s conf)."""
+    if df.sparkSession is session:
+        return df
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, session)

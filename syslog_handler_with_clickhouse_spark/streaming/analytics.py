@@ -31,32 +31,6 @@ def errors_per_device_minute(
     )
 
 
-def sliding_severity_counts(logs: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    return (
-        logs.withWatermark("Timestamp", watermark)
-        .groupBy(
-            F.window("Timestamp", "5 minutes", "1 minute").alias("w"), "Severity"
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.col("w.start").alias("win_start"), "Severity", "cnt")
-    )
-
-
-def device_sessions(logs: DataFrame, gap: str = "5 minutes") -> DataFrame:
-    """Session windows of device activity."""
-    return (
-        logs.withWatermark("Timestamp", "10 minutes")
-        .groupBy(F.session_window("Timestamp", gap).alias("w"), "Device")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "Device",
-            "n_events",
-        )
-    )
-
-
 def dedup_within_watermark(logs: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Stateful dedup on (Device, Message) — state bounded by the
     watermark instead of growing forever."""

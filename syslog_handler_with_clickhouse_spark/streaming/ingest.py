@@ -5,8 +5,8 @@ count-or-timeout micro-batcher → batched ClickHouse insert
 (`main.go:67-88`, `lib/cacheManage.go:12-65`).
 
 Spark mapping:
-- source       → readStream (file source for tests/replay; socket source
-                 for a live TCP dev-loop; Kafka for production syslog relay)
+- source       → readStream (file source for tests/replay; Kafka for
+                 production syslog relay)
 - ParseLog     → the P1-P8 native projection (functions/parse.py)
 - micro-batch  → trigger(processingTime='2 seconds')  (CacheTimeout,
                  `main.go:20`); batch size bounded by source rate limits
@@ -61,21 +61,6 @@ def raw_lines_stream(
         else F.lit("unknown:0")
     )
     return lines.select(F.col("value").alias("raw"), device.alias("device"))
-
-
-def socket_lines_stream(spark: SparkSession, host: str, port: int) -> DataFrame:
-    """TCP socket dev-loop source (`nc host port`), mirroring the
-    reference's manual smoke test (`README.md:118-128`).  The socket
-    source carries no peer address → device is the listen endpoint."""
-    lines = (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", str(port))
-        .load()
-    )
-    return lines.select(
-        F.col("value").alias("raw"), F.lit(f"{host}:{port}").alias("device")
-    )
 
 
 def parsed_stream(raw: DataFrame, clock_col: str | None = None) -> DataFrame:

@@ -921,31 +921,79 @@ def test_bm25_store_auto_compact_telemetry_and_assert_new(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}__alt")
 
 
-def test_bm25_store_topk_concurrent_scoped_width(spark, tmp_path):
-    """Round 16: the scoped-width path runs in a FORKED session
-    (private SQLConf), so two concurrent store-topk calls with
-    different widths must both return the serial answer and leave the
-    caller session's width untouched (the round-15 try/finally restore
-    raced exactly here)."""
+_DOCS16 = {
+    1: "the quick brown fox jumps over the lazy dog",
+    2: "quick brown foxes are quick and brown",
+    3: "the lazy dog sleeps all day long every day",
+    4: "a fox and a dog met a lazy fox",
+    5: "nothing in common here whatsoever tonight",
+    6: "dog dog dog and one lazy fox again",
+}
+
+# the caller-session confs a conf-scoped operator used to mutate
+_WATCHED = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled",
+)
+
+
+def _conf_snapshot(spark) -> tuple:
+    return tuple(spark.conf.get(k) for k in _WATCHED)
+
+
+def _watch_conf(spark, *fns) -> set:
+    """Run each of ``fns`` on its own thread while this thread polls the
+    caller session's watched confs; returns every snapshot seen.  A
+    thread's exception is re-raised."""
+    import threading
+
+    errors = []
+
+    def run(fn):
+        try:
+            fn()
+        except BaseException as e:  # pragma: no cover - re-raised below
+            errors.append(e)
+
+    ts = [threading.Thread(target=run, args=(fn,)) for fn in fns]
+    seen = {_conf_snapshot(spark)}
+    for t in ts:
+        t.start()
+    while any(t.is_alive() for t in ts):
+        seen.add(_conf_snapshot(spark))
+        ts[0].join(0.005)
+    for t in ts:
+        t.join()
+    seen.add(_conf_snapshot(spark))
+    if errors:
+        raise errors[0]
+    return seen
+
+
+def _rows(df) -> list:
+    return sorted(map(tuple, df.collect()))
+
+
+def test_bm25_store_topk_concurrent_scoped_width(spark, tmp_path,
+                                                 monkeypatch):
+    """The scoped-width path runs in a forked session (private
+    SQLConf), so two concurrent store-topk calls with different widths
+    must both return the serial answer and leave the caller session's
+    conf untouched throughout."""
     import threading
 
     from pyspark.sql import functions as F
 
+    from syslog_handler_with_clickhouse_spark.operators import retrieval
     from syslog_handler_with_clickhouse_spark.operators.retrieval import (
         bm25_store_init,
         bm25_store_insert,
         bm25_store_topk,
     )
 
-    docs = {
-        1: "the quick brown fox jumps over the lazy dog",
-        2: "quick brown foxes are quick and brown",
-        3: "the lazy dog sleeps all day long every day",
-        4: "a fox and a dog met a lazy fox",
-        5: "nothing in common here whatsoever tonight",
-        6: "dog dog dog and one lazy fox again",
-    }
-    df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
+    df = spark.createDataFrame(list(_DOCS16.items()),
+                               "doc_id long, text string")
     q14 = df.filter(F.col("doc_id").isin(1, 4)).select(
         F.col("doc_id").alias("query_id"), "text"
     )
@@ -958,35 +1006,212 @@ def test_bm25_store_topk_concurrent_scoped_width(spark, tmp_path):
         bm25_store_insert(spark, prefix, df)
         kw = dict(k=4, max_df_num=9, max_df_den=10)
         serial = {
-            "a": sorted(map(tuple, bm25_store_topk(
-                spark, prefix, q14, **kw).collect())),
-            "b": sorted(map(tuple, bm25_store_topk(
-                spark, prefix, q25, **kw).collect())),
+            "a": _rows(bm25_store_topk(spark, prefix, q14, **kw)),
+            "b": _rows(bm25_store_topk(spark, prefix, q25, **kw)),
         }
-        sess_width = spark.conf.get("spark.sql.shuffle.partitions")
+        # each thread widens to its own floor; the serial runs above
+        # (main thread) kept the real, small one
+        floors = {"a": 257, "b": 263}
+        real = retrieval._size_floor
+        monkeypatch.setattr(
+            retrieval, "_size_floor",
+            lambda d: floors.get(threading.current_thread().name[-1])
+            or real(d),
+        )
         out: dict = {}
 
-        def run(key, queries, width):
-            try:
-                out[key] = sorted(map(tuple, bm25_store_topk(
-                    spark, prefix, queries, force_width=width, **kw
-                ).collect()))
-            except Exception as e:  # pragma: no cover - surfaced below
-                out[key] = e
+        def run(key, queries):
+            threading.current_thread().name = f"topk-{key}"
+            out[key] = _rows(bm25_store_topk(spark, prefix, queries, **kw))
 
-        ts = [
-            threading.Thread(target=run, args=("a", q14, 257)),
-            threading.Thread(target=run, args=("b", q25, 263)),
-        ]
-        for t in ts:
-            t.start()
-        for t in ts:
-            t.join(300)
+        before = _conf_snapshot(spark)
+        seen = _watch_conf(spark, lambda: run("a", q14),
+                           lambda: run("b", q25))
         assert out["a"] == serial["a"], out["a"]
         assert out["b"] == serial["b"], out["b"]
-        # caller session's conf never mutated
-        assert spark.conf.get("spark.sql.shuffle.partitions") == sess_width
+        assert seen == {before}, seen
     finally:
         for t in (f"{prefix}_postings", f"{prefix}_dl", f"{prefix}_df"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
             spark.sql(f"DROP TABLE IF EXISTS {t}__alt")
+
+
+def test_bm25_store_topk_fork_carries_caller_conf(spark, tmp_path,
+                                                  monkeypatch):
+    """The widened store top-k plans in a fork that starts from the
+    caller's RUNTIME conf (a session handed in by a driver gets its UTC
+    zone and bucketed-scan ordering from ``apply_runtime_conf``, not
+    from the SparkContext), plus the width override."""
+    from pyspark.sql import functions as F
+
+    from syslog_handler_with_clickhouse_spark.operators import retrieval
+    from syslog_handler_with_clickhouse_spark.operators.retrieval import (
+        bm25_store_init,
+        bm25_store_insert,
+        bm25_store_topk,
+    )
+
+    tz, order = (
+        "spark.sql.session.timeZone",
+        "spark.sql.legacy.bucketedTableScan.outputOrdering",
+    )
+    df = spark.createDataFrame(list(_DOCS16.items()),
+                               "doc_id long, text string")
+    queries = df.select(F.col("doc_id").alias("query_id"), "text")
+    prefix = "t16bm25forkconf"
+    bm25_store_init(spark, prefix, num_buckets=4, location=str(tmp_path))
+    prev = {k: spark.conf.get(k) for k in (tz, order)}
+    try:
+        bm25_store_insert(spark, prefix, df)
+        kw = dict(k=4, max_df_num=9, max_df_den=10)
+        serial = _rows(bm25_store_topk(spark, prefix, queries, **kw))
+        seen = []
+        real_score = retrieval._bm25_score
+
+        def spy(postings, *a, **k):
+            c = postings.sparkSession.conf
+            seen.append((c.get(tz), c.get(order),
+                         c.get("spark.sql.shuffle.partitions")))
+            return real_score(postings, *a, **k)
+
+        monkeypatch.setattr(retrieval, "_bm25_score", spy)
+        monkeypatch.setattr(retrieval, "_size_floor", lambda d: 257)
+        # values no SparkContext default carries
+        spark.conf.set(tz, "Asia/Tokyo")
+        spark.conf.set(order, "false")
+        got = _rows(bm25_store_topk(spark, prefix, queries, **kw))
+        assert seen == [("Asia/Tokyo", "false", "257")], seen
+        assert got == serial
+        assert spark.conf.get(tz) == "Asia/Tokyo"
+        assert spark.conf.get("spark.sql.shuffle.partitions") != "257"
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+        for t in (f"{prefix}_postings", f"{prefix}_dl", f"{prefix}_df"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+            spark.sql(f"DROP TABLE IF EXISTS {t}__alt")
+
+
+def _widened(op: str, **kw):
+    """Site: retrieval ``op`` over the fixture, widened by a patched
+    ``_size_floor``; the serial answer comes from the unpatched run."""
+
+    def site(spark, tmp_path, monkeypatch, request):
+        from pyspark.sql import functions as F
+
+        from syslog_handler_with_clickhouse_spark.operators import retrieval
+
+        df = spark.createDataFrame(list(_DOCS16.items()),
+                                   "doc_id long, text string")
+        q = df.select(F.col("doc_id").alias("query_id"), "text")
+        serial = _rows(getattr(retrieval, op)(df, q, **kw))
+        monkeypatch.setattr(retrieval, "_size_floor", lambda d: 257)
+        return serial, lambda: _rows(getattr(retrieval, op)(df, q, **kw))
+
+    site.__name__ = f"widened_{op}"
+    return site
+
+
+def _widened_dedup_components(spark, tmp_path, monkeypatch, request):
+    from syslog_handler_with_clickhouse_spark.operators import dedup
+
+    # 60 chains of 4 edges: 240 edges, one edge per partition below
+    pairs = spark.createDataFrame(
+        [(c * 10 + i, c * 10 + i + 1) for c in range(60) for i in range(4)],
+        "doc_a long, doc_b long",
+    )
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", -1)
+    serial = _rows(dedup.dedup_components(pairs))
+    monkeypatch.setattr(dedup, "_CC_EDGES_PER_PARTITION", 1)
+    assert 240 > max(spark.sparkContext.defaultParallelism,
+                     int(spark.conf.get("spark.sql.shuffle.partitions")))
+    return serial, lambda: _rows(dedup.dedup_components(pairs))
+
+
+def _store_compact(spark, tmp_path, monkeypatch, request):
+    from pyspark.sql import functions as F
+
+    from syslog_handler_with_clickhouse_spark.operators.retrieval import (
+        bm25_store_compact,
+        bm25_store_init,
+        bm25_store_insert,
+        bm25_store_topk,
+    )
+
+    df = spark.createDataFrame(list(_DOCS16.items()),
+                               "doc_id long, text string")
+    q = df.select(F.col("doc_id").alias("query_id"), "text")
+    prefix = "t16bm25compactconf"
+
+    def drop():
+        for t in ("postings", "dl", "df"):
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}__alt")
+
+    request.addfinalizer(drop)
+    bm25_store_init(spark, prefix, num_buckets=4, location=str(tmp_path))
+    bm25_store_insert(spark, prefix, df.filter(F.col("doc_id") <= 3))
+    bm25_store_insert(spark, prefix, df.filter(F.col("doc_id") > 3))
+    kw = dict(k=4, max_df_num=9, max_df_den=10)
+    serial = _rows(bm25_store_topk(spark, prefix, q, **kw))
+
+    def run():
+        bm25_store_compact(spark, prefix, full=True)
+        return _rows(bm25_store_topk(spark, prefix, q, **kw))
+
+    return serial, run
+
+
+def _stream_query(spark, tmp_path, monkeypatch, request):
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from conftest import SF_SMALL
+
+    from syslog_handler_with_clickhouse_spark.queries import QUERIES
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *a, **k):
+        q = real_start(self, *a, **k)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+
+    def run():
+        rows = _rows(QUERIES["q64_stream_tumbling"](spark, SF_SMALL))
+        # the drained stream's state store ran at the stream width
+        parts = {
+            op["numShufflePartitions"]
+            for p in started[-1].recentProgress
+            for op in p["stateOperators"]
+        }
+        assert parts == {8}, parts
+        return rows
+
+    return None, run
+
+
+@pytest.mark.parametrize("site", [
+    _widened("bm25_topk", k=4, max_df_num=9, max_df_den=10),
+    _widened("rrf_hybrid_topk", k_leg=4, k_out=3),
+    _widened_dedup_components,
+    _store_compact,
+    _stream_query,
+], ids=lambda f: f.__name__.strip("_"))
+def test_conf_scoped_operator_leaves_caller_conf(spark, tmp_path,
+                                                 monkeypatch, request, site):
+    """Every conf-scoped operator runs its scope in a forked session:
+    while one runs on another thread, the caller session's shuffle
+    width, AQE advisory and auto-bucketed-scan flag never change, and
+    the scoped result equals the unscoped one."""
+    serial, run = site(spark, tmp_path, monkeypatch, request)
+    out = []
+    before = _conf_snapshot(spark)
+    seen = _watch_conf(spark, lambda: out.append(run()))
+    assert seen == {before}, seen
+    assert out[0], "empty result"
+    if serial is not None:
+        assert out[0] == serial
