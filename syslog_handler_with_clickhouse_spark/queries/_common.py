@@ -31,7 +31,7 @@ from ..operators import dedup, multimodal, similarity
 from ..operators.joins import asof_join
 from ..operators.topk import global_top_k, top_k_per_group
 from ..session import fork, reroot
-from ..sources.testdata import load_table, normalize_events_ts
+from ..sources.testdata import load_table, normalize_events_ts, scan_schema
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -148,21 +148,16 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     single read-only file — so stream from a temp dir holding a symlink
     to it (one dir per sf_dir, reused across calls)."""
     import os
-    import tempfile
 
     from ..session import apply_runtime_conf
-    from ..sources.testdata import reset_nanos_conf_if_unneeded, set_nanos_conf
 
     apply_runtime_conf(spark)
-    set_nanos_conf(spark)
     path = os.path.join(sf_dir, "events.parquet")
     if sf_dir not in _STREAM_DIRS:
         d = scratch_dir("events_stream_")
         os.symlink(path, os.path.join(d, "events.parquet"))
         _STREAM_DIRS[sf_dir] = d
-    schema = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(schema).parquet(_STREAM_DIRS[sf_dir])
-    reset_nanos_conf_if_unneeded(spark, raw)
+    raw = spark.readStream.schema(scan_schema(spark, path)).parquet(_STREAM_DIRS[sf_dir])
     return normalize_events_ts(raw)
 
 

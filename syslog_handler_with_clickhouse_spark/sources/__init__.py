@@ -1,1 +1,1 @@
-from .testdata import load_table, load_tables  # noqa: F401
+from .testdata import load_table  # noqa: F401

@@ -18,6 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..schema import LOG_SCHEMA
 
 LOGS_PARTITION_COL = "log_date"
 
@@ -44,7 +47,11 @@ def write_logs_batch(df: DataFrame, path: str, mode: str = "append") -> None:
 
 
 def read_logs(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path).drop(LOGS_PARTITION_COL)
+    """The store's rows as ``LOG_SCHEMA``.  The sink writes one fixed
+    schema, so the scan is given it (plus the partition column) instead
+    of starting a schema-inference job on every read-back."""
+    schema = T.StructType(LOG_SCHEMA.fields + [T.StructField(LOGS_PARTITION_COL, T.DateType())])
+    return spark.read.schema(schema).parquet(path).drop(LOGS_PARTITION_COL)
 
 
 def compact_parquet(

@@ -31,3 +31,19 @@ def test_fork_copies_runtime_conf_and_leaves_caller_alone(spark):
         assert sorted(map(tuple, back.collect())) == [(0, 4), (1, 3), (2, 3)]
     finally:
         spark.conf.set(tz, prev_tz)
+
+
+def test_codegen_cache_holds_repeated_query_mix(spark):
+    """A second round of 150 distinct projections compiles nothing: the
+    codegen cache (session.CODEGEN_CACHE_ENTRIES) outlasts the round.
+    With Spark's 100-entry default every class is compiled again."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles_in_round() -> int:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        for k in range(150):
+            spark.range(3).selectExpr(f"id * 7919 + {k} AS v").collect()
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    assert compiles_in_round() >= 150
+    assert compiles_in_round() == 0

@@ -62,6 +62,30 @@ def test_ingest_end_to_end(spark, tmp_path):
     assert read_logs(spark, store).count() == len(LINES_A) + len(LINES_B)
 
 
+def test_read_logs_pins_the_sink_schema(spark, tmp_path):
+    """The read-back is given LOG_SCHEMA (+ the partition column) instead
+    of inferring it: same schema and rows as an inferring scan, and no
+    job to build the frame."""
+    src = str(tmp_path / "incoming")
+    store = str(tmp_path / "store")
+    _write_fixture(src)
+    start_ingest(spark, src, store, str(tmp_path / "ckpt"), available_now=True).awaitTermination(120)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("read-logs-pinned", "read_logs")
+    try:
+        logs = read_logs(spark, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("read-logs-pinned")) == []
+
+    inferred = spark.read.parquet(store).drop("log_date")
+    assert logs.schema == inferred.schema
+    key = ["Timestamp", "Device", "Message"]
+    assert logs.orderBy(*key).collect() == inferred.orderBy(*key).collect()
+    assert logs.count() == len(LINES_A) + len(LINES_B)
+
+
 def test_streaming_window_agg(spark, tmp_path):
     """Windowed aggregation running in a real streaming query (memory sink)."""
     src = str(tmp_path / "in2")
